@@ -397,43 +397,43 @@ object Soak {
             lastPosPath.set(p); refreshTicks.incrementAndGet(); p
           }),
           Service.IndexRefresh("soak-ivfpq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalIvfPq(
-              s, "soakivfpq", corpusDir, "vec_id", "embedding", soakCents, soakCbs)
+            val p = graft.ext.Ivf(graft.ext.Pq(cbs = soakCbs), centroids = soakCents)
+              .ensureIncremental(s, "soakivfpq", corpusDir, "vec_id", "embedding")
             lastIvfPath.set(p); p
           }),
           Service.IndexRefresh("soak-sq8", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalSq8(
-              s, "soaksq8", corpusDir, "vec_id", "embedding", soakSq8)
+            val p = graft.ext.Sq8(prm = soakSq8)
+              .ensureIncremental(s, "soaksq8", corpusDir, "vec_id", "embedding")
             lastSq8Path.set(p); p
           }),
           Service.IndexRefresh("soak-bq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalBq(
-              s, "soakbq", corpusDir, "vec_id", "embedding", soakBqThr)
+            val p = graft.ext.Bq(thr = soakBqThr)
+              .ensureIncremental(s, "soakbq", corpusDir, "vec_id", "embedding")
             lastBqPath.set(p); p
           }),
           // round 16: the composed IVF-BQ family ages with the corpus
           // on the same ticker (frozen coarse quantizer + frozen
           // thresholds, like every other maintenance refresher)
           Service.IndexRefresh("soak-ivfbq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalIvfBq(
-              s, "soakivfbq", corpusDir, "vec_id", "embedding", soakCents, soakBqThr)
+            val p = graft.ext.Ivf(graft.ext.Bq(thr = soakBqThr), centroids = soakCents)
+              .ensureIncremental(s, "soakivfbq", corpusDir, "vec_id", "embedding")
             lastIvfBqPath.set(p); p
           }),
           // round 17: the OPQ family ages with the corpus on the same
           // ticker (frozen rotation + codebooks; appended parts encode
           // against them, like every other maintenance refresher)
           Service.IndexRefresh("soak-opq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalOpq(
-              s, "soakopq", corpusDir, "vec_id", "embedding", soakOpqRot, soakOpqCbs)
+            val p = graft.ext.Opq(graft.ext.Pq(cbs = soakOpqCbs), r = soakOpqRot)
+              .ensureIncremental(s, "soakopq", corpusDir, "vec_id", "embedding")
             lastOpqPath.set(p); p
           }),
           // round 18: the composed IVF-OPQ family ages on the same
           // ticker (frozen rotation + rotated-space coarse quantizer +
           // rotated codebooks)
           Service.IndexRefresh("soak-ivfopq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalIvfOpq(
-              s, "soakivfopq", corpusDir, "vec_id", "embedding",
-              soakOpqRot, soakIvfOpqCents, soakOpqCbs)
+            val p = graft.ext.Ivf(graft.ext.Opq(graft.ext.Pq(cbs = soakOpqCbs), r = soakOpqRot),
+              centroids = soakIvfOpqCents)
+              .ensureIncremental(s, "soakivfopq", corpusDir, "vec_id", "embedding")
             lastIvfOpqPath.set(p); p
           })),
         indexJanitor = true),
@@ -593,8 +593,8 @@ object Soak {
           // repro-scale pass, soak-scale miss); the exact rerank then
           // puts it at cos = 1.0 top-1 whenever it reaches the
           // candidate set
-          val ivfIds = graft.ext.Similarity.ivfPqProbe(spark, lastIvfPath.get(),
-            "vec_id", "label", "embedding", q,
+          val ivfIds = graft.ext.Ivf(graft.ext.Pq()).probe(spark, lastIvfPath.get(),
+            "vec_id", "embedding", q,
             k = 5, nprobe = 4, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
           // SQ8/BQ freshness: same marker, exact-rerank probes over the
@@ -602,20 +602,20 @@ object Soak {
           // vectors; same generous rerank as the IVF probe)
           val corpusAll = spark.read.parquet(corpusDir)
             .select(col("vec_id"), col("embedding"))
-          val sq8Ids = graft.ext.Similarity.sq8AdcRerank(spark, lastSq8Path.get(),
+          val sq8Ids = graft.ext.Sq8().probe(spark, lastSq8Path.get(),
             corpusAll, "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val bqIds = graft.ext.Similarity.bqHammingRerank(spark, lastBqPath.get(),
+          val bqIds = graft.ext.Bq().probe(spark, lastBqPath.get(),
             corpusAll, "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val ivfBqIds = graft.ext.Similarity.ivfBqProbe(spark, lastIvfBqPath.get(),
-            "vec_id", "label", "embedding", q, k = 5, nprobe = 4, rerank = 2000)
+          val ivfBqIds = graft.ext.Ivf(graft.ext.Bq()).probe(spark, lastIvfBqPath.get(),
+            "vec_id", "embedding", q, k = 5, nprobe = 4, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val opqIds = graft.ext.Similarity.opqRerank(spark, lastOpqPath.get(),
+          val opqIds = graft.ext.Opq().probe(spark, lastOpqPath.get(),
             corpusAll, "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val ivfOpqIds = graft.ext.Similarity.ivfOpqProbe(spark,
-            lastIvfOpqPath.get(), "vec_id", "label", "embedding", q,
+          val ivfOpqIds = graft.ext.Ivf(graft.ext.Opq()).probe(spark,
+            lastIvfOpqPath.get(), "vec_id", "embedding", q,
             k = 5, nprobe = 4, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
           if (posIds.contains(MarkerId) && ivfIds.contains(MarkerId) &&

@@ -1225,21 +1225,21 @@ object SparkEntry {
     "ivf_probe_kmeans" -> graft.ext.Similarity.ivfKmeansProbeOracleSql(),
     "pq_codes" -> graft.ext.Similarity.pqCodesOracleSql(dim = 64, m = 4, ksub = 16),
     "pq_adc_topk" -> graft.ext.Similarity.pqAdcOracleSql(dim = 64, m = 4, ksub = 16),
-    "pq_rerank_topk" -> graft.ext.Similarity.pqRerankOracleSql(dim = 64, m = 4, ksub = 16),
-    "ivf_pq_topk" -> graft.ext.Similarity.ivfPqOracleSql(dim = 64, m = 4, ksub = 16, k = 8),
-    "ivf_pq_residual" -> graft.ext.Similarity.ivfPqResidualOracleSql(dim = 64, m = 4, ksub = 16, k = 8),
-    "ivf_pq_batch" -> graft.ext.Similarity.ivfPqBatchOracleSql(dim = 64, m = 4, ksub = 16, k = 8, nQueries = 3),
-    "ivf_pq_residual_batch" -> graft.ext.Similarity.ivfPqResidualBatchOracleSql(dim = 64, m = 4, ksub = 16, k = 8, nQueries = 3),
+    "pq_rerank_topk" -> graft.ext.Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16),
+    "ivf_pq_topk" -> graft.ext.Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16, k = 8),
+    "ivf_pq_residual" -> graft.ext.Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16, k = 8, residual = true),
+    "ivf_pq_batch" -> graft.ext.Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16, k = 8, nQueries = 3),
+    "ivf_pq_residual_batch" -> graft.ext.Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16, k = 8, nQueries = 3, residual = true),
     "sq8_topk" -> graft.ext.Similarity.sq8OracleSql(dim = 64),
     "opq_topk" -> graft.ext.ExtQueries.opqOracleSqlLive(),
     "ivf_opq_topk" -> graft.ext.ExtQueries.ivfOpqOracleSqlLive(),
-    "ivf_sq8_topk" -> graft.ext.Similarity.ivfSq8OracleSql(dim = 64, k = 8),
+    "ivf_sq8_topk" -> graft.ext.Similarity.sq8OracleSql(dim = 64, k = 8),
     "bq_hamming_topk" -> graft.ext.Similarity.bqOracleSql(dim = 64),
-    "sq8_batch" -> graft.ext.Similarity.sq8BatchOracleSql(dim = 64, nQueries = 3),
-    "ivf_sq8_batch" -> graft.ext.Similarity.ivfSq8BatchOracleSql(dim = 64, k = 8, nQueries = 3),
-    "bq_hamming_batch" -> graft.ext.Similarity.bqBatchOracleSql(dim = 64, nQueries = 3),
-    "ivf_bq_topk" -> graft.ext.Similarity.ivfBqOracleSql(dim = 64, k = 8),
-    "ivf_bq_batch" -> graft.ext.Similarity.ivfBqBatchOracleSql(dim = 64, k = 8, nQueries = 3),
+    "sq8_batch" -> graft.ext.Similarity.sq8OracleSql(dim = 64, nQueries = 3),
+    "ivf_sq8_batch" -> graft.ext.Similarity.sq8OracleSql(dim = 64, k = 8, nQueries = 3),
+    "bq_hamming_batch" -> graft.ext.Similarity.bqOracleSql(dim = 64, nQueries = 3),
+    "ivf_bq_topk" -> graft.ext.Similarity.bqOracleSql(dim = 64, k = 8),
+    "ivf_bq_batch" -> graft.ext.Similarity.bqOracleSql(dim = 64, k = 8, nQueries = 3),
     "phrase_search3" ->
       // 3-term anchor-align: term i joins on (doc, pos - i)
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),

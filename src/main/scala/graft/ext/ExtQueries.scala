@@ -268,13 +268,13 @@ object ExtQueries {
   }
 
   /** E2 — product-quantization codes ([[Similarity.pqCodebooks]] +
-    * [[Similarity.pqEncode]]): 64-dim vectors → 4 subspace codewords
+    * the [[Pq]] encode): 64-dim vectors → 4 subspace codewords
     * (16 each, quantized-L2 k-means) + the stored norm — the m-bytes-
     * per-vector representation behind billion-scale ANN (Jégou 2011).
     * Hash-gated end to end (learning included) via the same 1e-9
     * quantization as `kmeans_centroids`.
     */
-  /** The persisted PQ index for `dir`'s embeddings ([[Similarity.buildPq]]
+  /** The persisted PQ index for `dir`'s embeddings ([[Pq]]
     * behind [[IndexStore.ensure]] — round 14, VERDICT r13 #3 / ADVICE
     * r13 #1: codebooks AND codes now persist keyed by the corpus
     * fingerprint, replacing the per-JVM codebook memo that could serve
@@ -287,9 +287,9 @@ object ExtQueries {
     val kind = if (corpusOnly) "pq_noq" else "pq_all"
     IndexStore.ensure(kind, spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
       val emb = Tables.embeddings(spark, dir)
-      Similarity.buildPq(
+      Pq(dim = 64, m = 4, ksub = 16).build(
         if (corpusOnly) emb.filter(col("vec_id") =!= 0) else emb,
-        "vec_id", "embedding", tmp, dim = 64, m = 4, ksub = 16)
+        "vec_id", "embedding", tmp)
     }
   }
 
@@ -302,19 +302,19 @@ object ExtQueries {
   private val lastOpqIndex = new java.util.concurrent.atomic.AtomicReference[String]
 
   /** E2 — OPQ: learned orthogonal rotation + PQ + exact rerank (Ge et
-    * al. CVPR 2013; [[Similarity.buildOpq]]/[[Similarity.opqRerank]]) —
+    * al. CVPR 2013; [[Opq]]) —
     * the accuracy rung above plain PQ at the same bit budget.
     * Probe-only: the alternating rotation/codebook learn pays once per
     * corpus snapshot behind [[IndexStore.ensure]].
     */
   def opqTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("opq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildOpq(
+      Opq(Pq(dim = 64, m = 4, ksub = 16)).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", tmp, dim = 64, m = 4, ksub = 16)
+        "vec_id", "embedding", tmp)
     }
     lastOpqIndex.set(idx)
-    Similarity.opqRerank(spark, idx,
+    Opq().probe(spark, idx,
       Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
       "vec_id", "embedding", queryVec(spark, dir))
   }
@@ -329,8 +329,8 @@ object ExtQueries {
     Option(lastOpqIndex.get()) match {
       case Some(idx) =>
         val spark = SparkSession.active
-        Similarity.opqOracleSql(
-          Similarity.readOpqRotation(spark, idx), dim = 64, m = 4, ksub = 16)
+        Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16,
+          rotation = Similarity.readOpqRotation(spark, idx))
       case None => "SELECT 1 AS x WHERE false"
     }
 
@@ -340,19 +340,19 @@ object ExtQueries {
   private val lastIvfOpqIndex = new java.util.concurrent.atomic.AtomicReference[String]
 
   /** E2 — composed IVF-OPQ (FAISS's "OPQ,IVF,PQ"; VERDICT r17 #6 —
-    * [[Similarity.buildIvfOpq]]/[[Similarity.ivfOpqProbe]]): the
+    * [[Ivf]] over [[Opq]]): the
     * learned rotation ahead of the coarse quantizer, cells and codes
     * both in rotated space, exact rerank over the cell-pruned
     * originals. Probe-only behind [[IndexStore.ensure]].
     */
   def ivfOpqTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfopq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfOpq(
+      Ivf(Opq(Pq(dim = 64, m = 4, ksub = 16)), k = 8).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+        "vec_id", "embedding", tmp)
     }
     lastIvfOpqIndex.set(idx)
-    Similarity.ivfOpqProbe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Opq()).probe(spark, idx, "vec_id", "embedding",
       queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
   }
 
@@ -363,16 +363,15 @@ object ExtQueries {
     Option(lastIvfOpqIndex.get()) match {
       case Some(idx) =>
         val spark = SparkSession.active
-        Similarity.ivfOpqOracleSql(
-          Similarity.readOpqRotation(spark, idx),
-          dim = 64, m = 4, ksub = 16, k = 8)
+        Similarity.pqOracleSql(dim = 64, m = 4, ksub = 16, k = 8,
+          rotation = Similarity.readOpqRotation(spark, idx))
       case None => "SELECT 1 AS x WHERE false"
     }
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${pqIndexFor(spark, dir, corpusOnly = false)}/codes")
 
-  /** E2 — PQ asymmetric-distance top-k ([[Similarity.pqAdcTopK]]): the
+  /** E2 — PQ asymmetric-distance top-k ([[Codec.candidates]]): the
     * query stays exact, every corpus vector is scored from m table
     * lookups over its PERSISTED codes — the scan never touches the
     * original vectors (probe-only since round 14; the learn+encode is
@@ -380,11 +379,11 @@ object ExtQueries {
     */
   def pqAdcTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = pqIndexFor(spark, dir, corpusOnly = true)
-    Similarity.pqAdcTopK(spark.read.parquet(s"$idx/codes"), "vec_id",
-      Similarity.readPqCodebooks(spark, idx), queryVec(spark, dir))
+    Pq().read(spark, idx).candidates(spark.read.parquet(s"$idx/codes"), "vec_id",
+      queryVec(spark, dir), 10)
   }
 
-  /** E2 — PQ candidates + exact re-rank ([[Similarity.pqAdcRerank]]):
+  /** E2 — PQ candidates + exact re-rank ([[Codec.probe]]):
     * the production PQ composition — ADC picks 50 candidate ids from
     * the persisted-code scan, exact cosine over those 50 originals
     * ranks the final 10. Raw ADC cannot rank within a tight
@@ -393,14 +392,13 @@ object ExtQueries {
     */
   def pqRerankTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = pqIndexFor(spark, dir, corpusOnly = true)
-    Similarity.pqAdcRerank(spark.read.parquet(s"$idx/codes"),
+    Pq().probe(spark, idx,
       Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-      "vec_id", "embedding", Similarity.readPqCodebooks(spark, idx),
-      queryVec(spark, dir))
+      "vec_id", "embedding", queryVec(spark, dir))
   }
 
   /** E2 — SQ8 scalar-quantized ADC + exact re-rank
-    * ([[Similarity.buildSq8]]/[[Similarity.sq8AdcRerank]]): the
+    * ([[Sq8]]): the
     * 8-bit/dim rung of the compression ladder — per-dim affine codes
     * learned from one exact min/max pass (no iterative FP anywhere),
     * probe scans the 4×-smaller codes table, raw vectors consulted only
@@ -409,64 +407,64 @@ object ExtQueries {
     */
   def sq8Topk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("sq8", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildSq8(
+      Sq8(dim = 64).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", tmp, dim = 64)
+        "vec_id", "embedding", tmp)
     }
-    Similarity.sq8AdcRerank(spark, idx,
+    Sq8().probe(spark, idx,
       Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
       "vec_id", "embedding", queryVec(spark, dir))
   }
 
   /** E2 — binary-quantization Hamming + exact re-rank
-    * ([[Similarity.buildBq]]/[[Similarity.bqHammingRerank]]): the
+    * ([[Bq]]): the
     * 1-bit/dim rung — mean-centered sign bits packed 32/word, integer
     * popcount(xor) candidate scan (zero FP before the rerank join).
     * Probe-only behind [[IndexStore.ensure]].
     */
   def bqHammingTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("bq1", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildBq(
+      Bq(dim = 64).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", tmp, dim = 64)
+        "vec_id", "embedding", tmp)
     }
-    Similarity.bqHammingRerank(spark, idx,
+    Bq().probe(spark, idx,
       Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
       "vec_id", "embedding", queryVec(spark, dir))
   }
 
-  /** E2 — composed IVF-BQ ([[Similarity.buildIvfBq]] /
-    * [[Similarity.ivfBqProbe]], VERDICT r15 #3 — the billion-vector
+  /** E2 — composed IVF-BQ ([[Ivf]] over
+    * [[Bq]], VERDICT r15 #3 — the billion-vector
     * first-pass shape): cell-pruned sign-bit words, integer-exact
     * Hamming over ≤ nprobe cells, exact rerank; hash-gated by the
     * k-means unroll × sign-bit CTE composition.
     */
   def ivfBqTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfbq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfBq(
+      Ivf(Bq(dim = 64), k = 8).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+        "vec_id", "embedding", tmp)
     }
-    Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Bq()).probe(spark, idx, "vec_id", "embedding",
       queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
   }
 
-  /** E2 — BATCH composed IVF-BQ ([[Similarity.ivfBqProbeBatch]]):
+  /** E2 — BATCH composed IVF-BQ ([[Ivf.probeBatch]] over [[Bq]]):
     * per-query cell ranking + the words scan restricted to the batch's
     * probed-cell union + integer Hamming + exact rerank, one pass.
     */
   def ivfBqBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfbqb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfBq(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+      Ivf(Bq(dim = 64), k = 8).build(emb.filter(col("vec_id") >= 3).drop("label"),
+        "vec_id", "embedding", tmp)
     }
-    Similarity.ivfBqProbeBatch(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Bq()).probeBatch(spark, idx, "vec_id", "embedding",
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
   }
 
-  /** E2 — BATCH SQ8 ([[Similarity.sq8ProbeBatch]]): 3 queries ADC-score
+  /** E2 — BATCH SQ8 ([[Codec.probeBatch]] over [[Sq8]]): 3 queries ADC-score
     * the codes table and exact-rerank in ONE distributed pass — the
     * flat-rung serving shape (VERDICT r15 #2: batch probes were
     * PQ-only). Corpus = vec_id ≥ 3, queries = vec_id < 3; every window
@@ -475,15 +473,15 @@ object ExtQueries {
   def sq8Batch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("sq8b", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildSq8(emb.filter(col("vec_id") >= 3),
-        "vec_id", "embedding", tmp, dim = 64)
+      Sq8(dim = 64).build(emb.filter(col("vec_id") >= 3),
+        "vec_id", "embedding", tmp)
     }
-    Similarity.sq8ProbeBatch(spark, idx, emb.filter(col("vec_id") >= 3),
+    Sq8().probeBatch(spark, idx, emb.filter(col("vec_id") >= 3),
       "vec_id", "embedding", emb.filter(col("vec_id") < 3), "vec_id",
       "embedding", k = 10, rerank = 50)
   }
 
-  /** E2 — BATCH composed IVF-SQ8 ([[Similarity.ivfSq8ProbeBatch]]):
+  /** E2 — BATCH composed IVF-SQ8 ([[Ivf.probeBatch]] over [[Sq8]]):
     * per-query cell ranking + the codes scan restricted to the batch's
     * probed-cell union + exact rerank, all in one distributed pass;
     * hash-gated by the k-means × SQ8 per-qid composition.
@@ -491,15 +489,15 @@ object ExtQueries {
   def ivfSq8Batch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfsq8b", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfSq8(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+      Ivf(Sq8(dim = 64), k = 8).build(emb.filter(col("vec_id") >= 3).drop("label"),
+        "vec_id", "embedding", tmp)
     }
-    Similarity.ivfSq8ProbeBatch(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Sq8()).probeBatch(spark, idx, "vec_id", "embedding",
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
   }
 
-  /** E2 — BATCH BQ ([[Similarity.bqProbeBatch]]): queries binarize
+  /** E2 — BATCH BQ ([[Codec.probeBatch]] over [[Bq]]): queries binarize
     * in-plan against the frozen thresholds, every (query, words row)
     * pair scores integer-exact Hamming, per-qid rank + exact rerank —
     * one pass, zero FP before the rerank join.
@@ -507,10 +505,10 @@ object ExtQueries {
   def bqHammingBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("bqb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildBq(emb.filter(col("vec_id") >= 3),
-        "vec_id", "embedding", tmp, dim = 64)
+      Bq(dim = 64).build(emb.filter(col("vec_id") >= 3),
+        "vec_id", "embedding", tmp)
     }
-    Similarity.bqProbeBatch(spark, idx, emb.filter(col("vec_id") >= 3),
+    Bq().probeBatch(spark, idx, emb.filter(col("vec_id") >= 3),
       "vec_id", "embedding", emb.filter(col("vec_id") < 3), "vec_id",
       "embedding", k = 10, rerank = 50)
   }
@@ -800,51 +798,52 @@ object ExtQueries {
     */
   private def ivfIndexFor(spark: SparkSession, dir: String): String =
     IndexStore.ensure("ivf_novec0", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvf(
+      Ivf().build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "label", "embedding", tmp)
+        "vec_id", "embedding", tmp)
     }
 
   /** E2 — IVF probe: best cell by centroid score, exact top-10 within
-    * it, served from the persisted index ([[Similarity.ivfProbe]]): the
+    * it, served from the persisted index ([[Ivf.probe]]): the
     * cell ranking reads the K-row centroids table, the candidate scan
     * reads ONE pruned partition of the cell-partitioned vectors table —
     * the raw embeddings are never scanned (the coarse-quantizer ANN
     * scale path; a probe touches corpus/K rows).
     */
   def ivfProbe(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbe(spark, ivfIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10)
+    Ivf().probe(spark, ivfIndexFor(spark, dir),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10, nprobe = 1)
 
   /** E2 — IVF probe at nprobe=2: exact top-10 within the TWO best
-    * cells ([[Similarity.ivfProbe]]'s recall knob — more cells probed,
+    * cells ([[Ivf.probe]]'s recall knob — more cells probed,
     * strictly better recall, still nprobe pruned partitions scanned).
     */
   def ivfProbe2(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbe(spark, ivfIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10, nprobe = 2)
+    Ivf().probe(spark, ivfIndexFor(spark, dir),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10, nprobe = 2)
 
   /** E2 — IVF probe with the DERIVED nprobe default
-    * ([[Similarity.ivfProbeAuto]]): the caller states a recall target
+    * ([[Ivf.autoNprobe]]): the caller states a recall target
     * and the probe reads the cell count off the persisted index and
     * applies the curve-calibrated closed form `nprobeFor(K, target)`.
     * The oracle derives the same nprobe from K in SQL, so the formula
     * itself is under the hash gate.
     */
-  def ivfProbeAuto(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbeAuto(spark, ivfIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10,
-      targetRecall = 0.9)
+  def ivfProbeAuto(spark: SparkSession, dir: String): DataFrame = {
+    val idx = ivfIndexFor(spark, dir)
+    Ivf().probe(spark, idx, "vec_id", "embedding", queryVec(spark, dir), k = 10,
+      nprobe = Ivf.autoNprobe(spark, idx, targetRecall = 0.9))
+  }
 
   /** The LEARNED-quantizer IVF index: no label column consumed — cells
-    * come from [[Similarity.buildIvfKmeans]] (deterministic spherical
+    * come from [[Ivf]] with `k` cells (deterministic spherical
     * k-means, K ≈ √(n/8)). Built once per corpus snapshot.
     */
   private def ivfKmeansIndexFor(spark: SparkSession, dir: String): String =
     IndexStore.ensure("ivfkmeans", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
       val emb = Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label")
       val k = math.max(4, math.ceil(math.sqrt(emb.count().toDouble / 8)).toInt)
-      Similarity.buildIvfKmeans(emb, "vec_id", "embedding", tmp, k = k)
+      Ivf(k = k, iters = 5).build(emb, "vec_id", "embedding", tmp)
     }
 
   /** E2 — IVF probe over the LEARNED coarse quantizer (the real-corpus
@@ -858,34 +857,34 @@ object ExtQueries {
     * hash-exact probe can still be a bad quantizer).
     */
   def ivfProbeKmeans(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbe(spark, ivfKmeansIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10, nprobe = 2)
+    Ivf().probe(spark, ivfKmeansIndexFor(spark, dir),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10, nprobe = 2)
 
-  /** The composed IVF-ADC index ([[Similarity.buildIvfPq]]): 8 learned
+  /** The composed IVF-ADC index ([[Ivf]] over [[Pq]]): 8 learned
     * coarse cells × (4 × 16)-codeword PQ, built once per corpus
     * snapshot.
     */
-  /** E2 — COMPOSED IVF-SQ8 probe ([[Similarity.buildIvfSq8]] /
-    * [[Similarity.ivfSq8Probe]]): the FAISS "IVF,SQ8" pairing — coarse
+  /** E2 — COMPOSED IVF-SQ8 probe ([[Ivf]] over
+    * [[Sq8]]): the FAISS "IVF,SQ8" pairing — coarse
     * cells × per-dim affine 8-bit codes, probe pruned to ≤ nprobe cells
     * on both the code scan and the rerank read. Probe-only behind
     * [[IndexStore.ensure]].
     */
   def ivfSq8Topk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfsq8", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfSq8(
+      Ivf(Sq8(dim = 64), k = 8).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+        "vec_id", "embedding", tmp)
     }
-    Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Sq8()).probe(spark, idx, "vec_id", "embedding",
       queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
   }
 
   private def ivfPqIndexFor(spark: SparkSession, dir: String): String =
     IndexStore.ensure("ivfpq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPq(
+      Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+        "vec_id", "embedding", tmp)
     }
 
   /** E2 — the production billion-scale ANN probe (VERDICT r13 #1,
@@ -894,16 +893,16 @@ object ExtQueries {
     * the scan reads corpus·nprobe/K code rows, ~12 B each), 50
     * candidates exact-reranked against the pruned vectors. The whole
     * learn → encode → probe chain is hash-gated
-    * ([[Similarity.ivfPqOracleSql]] composes the coarse-k-means and
+    * ([[Similarity.pqOracleSql]] composes the coarse-k-means and
     * PQ quantized unrolls); RecallSpec holds the composed recall
     * floor at ≥ 0.9.
     */
   def ivfPqTopk(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfPqProbe(spark, ivfPqIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir),
+    Ivf(Pq()).probe(spark, ivfPqIndexFor(spark, dir),
+      "vec_id", "embedding", queryVec(spark, dir),
       k = 10, nprobe = 2, rerank = 50)
 
-  /** E2 — BATCH IVF-ADC ([[Similarity.ivfPqProbeBatch]]): 3 queries
+  /** E2 — BATCH IVF-ADC ([[Ivf.probeBatch]]): 3 queries
     * rank cells, ADC-scan, and exact-rerank in ONE set of distributed
     * joins — the retrieval-pipeline serving shape (a driver loop of
     * single probes is N jobs; the batch is one). Corpus = vec_id ≥ 3,
@@ -914,15 +913,15 @@ object ExtQueries {
   def ivfPqBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfpqb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPq(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(
+        emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", tmp)
     }
-    Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Pq()).probeBatch(spark, idx, "vec_id", "embedding",
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
   }
 
-  /** E2 — RESIDUAL IVF-ADC ([[Similarity.buildIvfPqResidual]], the
+  /** E2 — RESIDUAL IVF-ADC ([[Ivf]] with `residual`, the
     * classic Jégou 2011 IVFADC): PQ codes quantize v − c(v), probes add
     * the cell's q·c back — within-cell resolution the raw-code form
     * lacks at the same bit budget. Same pruned probe shape as
@@ -930,30 +929,30 @@ object ExtQueries {
     */
   def ivfPqResidual(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfpqres", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPqResidual(
+      Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8, residual = true).build(
         Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+        "vec_id", "embedding", tmp)
     }
-    Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Pq(), residual = true).probe(spark, idx, "vec_id", "embedding",
       queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
   }
 
   /** E2 — RESIDUAL × BATCH (VERDICT r14 #4, the production pair:
     * residual accuracy at the same bit budget × one-distributed-pass
-    * serving): [[Similarity.ivfPqProbeBatch]] auto-detects the
-    * [[Similarity.buildIvfPqResidual]] layout and joins the broadcast
+    * serving): [[Ivf.probeBatch]] over the
+    * [[Ivf]] with `residual` layout joins the broadcast
     * K-row quantizer for the per-(query, cell) q·c terms — the batch
     * twin of the single probe's literal CASE. Corpus = vec_id ≥ 3,
     * queries = vec_id < 3, windows all qid-partitioned; hash-gated by
-    * [[Similarity.ivfPqResidualBatchOracleSql]].
+    * [[Similarity.pqOracleSql]].
     */
   def ivfPqResidualBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfpqresb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPqResidual(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8, residual = true).build(
+        emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", tmp)
     }
-    Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Pq(), residual = true).probeBatch(spark, idx, "vec_id", "embedding",
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
   }

@@ -36,12 +36,6 @@ object PixelCodec {
   /** Decoded raster: 8-bit RGB, row-major, 3 bytes per pixel. */
   final case class RgbImage(width: Int, height: Int, rgb: Array[Byte]) {
     require(rgb.length == width * height * 3, "pixel buffer size mismatch")
-    /** Sum of every channel byte (unsigned) — the arithmetic-oracle probe. */
-    def pixelSum: Long = {
-      var s = 0L; var i = 0
-      while (i < rgb.length) { s += rgb(i) & 0xff; i += 1 }
-      s
-    }
   }
 
   /** Hard ceiling on decoded raster size (64 MPx ≈ 192 MB RGB): a

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded per-group top-`k` by `(score, id)` — the batch ANN probes'
-  * candidate cut ([[graft.ext.Similarity]]'s `topKPerQid`).
+  * candidate cut ([[graft.ext.Ivf]]'s `topKPerQid`).
   *
   * Why not `row_number().over(qid window)`: the window plans as a FULL
   * SORT of the scored stream (corpus×n_q rows — the widest dataflow of

@@ -88,7 +88,7 @@ object Scans {
     *   - it is SKIPPED when the input is already at least that wide —
     *     at corpus scale a scan is thousands of partitions and the
     *     helper degenerates to the identity, so no production plan
-    *     pays an extra exchange (the [[graft.ext.Similarity]]
+    *     pays an extra exchange (the [[graft.ext.Ivf]]
     *     spreadForScore contract). The width comes from the analyzed
     *     plan's file listing via [[estimateScanPartitions]] — no
     *     physical-planning pass at construction (VERDICT r18 #8); a

@@ -117,18 +117,17 @@ class IncrementalIndexSpec extends SparkSpec {
     def ensureInc(): String =
       IndexStore.ensureIncremental("incpq", spark, src) { (part, tmp) =>
         partBuilds += 1
-        Similarity.buildPqPart(spark.read.parquet(part), "vec_id", "embedding", cbs, tmp)
-      } { (parts, tmp) => Similarity.mergePq(spark, cbs, parts, tmp) }
+        Pq(cbs = cbs).part(spark.read.parquet(part), "vec_id", "embedding", tmp)
+      } { (parts, tmp) => Pq(cbs = cbs).merge(spark, parts, tmp) }
 
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.pqAdcTopK(spark.read.parquet(s"$idx/codes"), "vec_id",
-        Similarity.readPqCodebooks(spark, idx), q)
+      Pq().read(spark, idx).candidates(spark.read.parquet(s"$idx/codes"), "vec_id", q, 10)
         .as[(Long, Double)].collect().toSeq
     def inlineProbe(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-      Similarity.pqAdcTopK(
-        Similarity.pqEncode(df, "vec_id", "embedding", cbs), "vec_id", cbs, q)
+      Pq(cbs = cbs).candidates(
+        Pq(cbs = cbs).encode(df, "vec_id", "embedding"), "vec_id", q, 10)
         .as[(Long, Double)].collect().toSeq
 
     val i1 = ensureInc()
@@ -140,8 +139,7 @@ class IncrementalIndexSpec extends SparkSpec {
     // monolithic buildPq over the same corpus learns the same
     // (deterministic) codebooks and probes identically
     val mono1 = tmpDir("inc-pq-mono1")
-    Similarity.buildPq(initial, "vec_id", "embedding", mono1,
-      dim = 24, m = 4, ksub = 8)
+    Pq(dim = 24, m = 4, ksub = 8).build(initial, "vec_id", "embedding", mono1)
     assert(probe(mono1) == probe(i1))
 
     // --- a new hour of vectors arrives
@@ -167,14 +165,14 @@ class IncrementalIndexSpec extends SparkSpec {
     def ensureInc(): String =
       IndexStore.ensureIncremental("incivfpq", spark, src) { (part, tmp) =>
         partBuilds += 1
-        Similarity.buildIvfPqPart(spark.read.parquet(part), "vec_id", "embedding",
-          cents, cbs, tmp)
-      } { (parts, tmp) => Similarity.mergeIvfPq(spark, cbs, parts, tmp) }
+        Ivf(Pq(cbs = cbs), centroids = cents).part(spark.read.parquet(part),
+          "vec_id", "embedding", tmp)
+      } { (parts, tmp) => Ivf(Pq(cbs = cbs)).merge(spark, parts, tmp) }
 
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probeDf(idx: String) =
-      Similarity.ivfPqProbe(spark, idx, "vec_id", "label", "embedding", q,
+      Ivf(Pq()).probe(spark, idx, "vec_id", "embedding", q,
         k = 10, nprobe = 2, rerank = 60)
     def probe(idx: String): Seq[(Long, Double)] =
       probeDf(idx).as[(Long, Double)].collect().toSeq
@@ -182,8 +180,8 @@ class IncrementalIndexSpec extends SparkSpec {
     // buildIvfPq's layout under the same (deterministic) learners
     def mono(df: org.apache.spark.sql.DataFrame, tag: String): String = {
       val part = tmpDir(s"inc-ivfpq-$tag-part"); val out = tmpDir(s"inc-ivfpq-$tag")
-      Similarity.buildIvfPqPart(df, "vec_id", "embedding", cents, cbs, part)
-      Similarity.mergeIvfPq(spark, cbs, Seq(part), out)
+      Ivf(Pq(cbs = cbs), centroids = cents).part(df, "vec_id", "embedding", part)
+      Ivf(Pq(cbs = cbs)).merge(spark, Seq(part), out)
       out
     }
 
@@ -220,17 +218,17 @@ class IncrementalIndexSpec extends SparkSpec {
     val prm = Similarity.sq8Params(initial, "vec_id", "embedding", dim = 24)
 
     def ensureInc(): String =
-      Similarity.ensureIncrementalIvfSq8(spark, "incivfsq8", src,
-        "vec_id", "embedding", cents, prm)
+      Ivf(Sq8(prm = prm), centroids = cents).ensureIncremental(spark, "incivfsq8", src,
+        "vec_id", "embedding")
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding", q,
+      Ivf(Sq8()).probe(spark, idx, "vec_id", "embedding", q,
         k = 10, nprobe = 2, rerank = 60).as[(Long, Double)].collect().toSeq
     def mono(df: org.apache.spark.sql.DataFrame, tag: String): String = {
       val part = tmpDir(s"inc-ivfsq8-$tag-part"); val out = tmpDir(s"inc-ivfsq8-$tag")
-      Similarity.buildIvfSq8Part(df, "vec_id", "embedding", cents, prm, part)
-      Similarity.mergeIvfSq8(spark, prm, Seq(part), out)
+      Ivf(Sq8(prm = prm), centroids = cents).part(df, "vec_id", "embedding", part)
+      Ivf(Sq8(prm = prm)).merge(spark, Seq(part), out)
       out
     }
 
@@ -253,17 +251,17 @@ class IncrementalIndexSpec extends SparkSpec {
     val thr = Similarity.bqThresholds(initial, "vec_id", "embedding", dim = 24)
 
     def ensureInc(): String =
-      Similarity.ensureIncrementalIvfBq(spark, "incivfbq", src,
-        "vec_id", "embedding", cents, thr)
+      Ivf(Bq(thr = thr), centroids = cents).ensureIncremental(spark, "incivfbq", src,
+        "vec_id", "embedding")
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding", q,
+      Ivf(Bq()).probe(spark, idx, "vec_id", "embedding", q,
         k = 10, nprobe = 2, rerank = 60).as[(Long, Double)].collect().toSeq
     def mono(df: org.apache.spark.sql.DataFrame, tag: String): String = {
       val part = tmpDir(s"inc-ivfbq-$tag-part"); val out = tmpDir(s"inc-ivfbq-$tag")
-      Similarity.buildIvfBqPart(df, "vec_id", "embedding", cents, thr, part)
-      Similarity.mergeIvfBq(spark, thr, Seq(part), out)
+      Ivf(Bq(thr = thr), centroids = cents).part(df, "vec_id", "embedding", part)
+      Ivf(Bq(thr = thr)).merge(spark, Seq(part), out)
       out
     }
 
@@ -275,7 +273,7 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(i2 != i1)
     assert(probe(i2) == probe(mono(all.drop("label"), "m2")))
     // the merged multi-part layout still partition-prunes words+vectors
-    val scans = Similarity.ivfBqProbe(spark, i2, "vec_id", "label",
+    val scans = Ivf(Bq()).probe(spark, i2, "vec_id",
       "embedding", q, k = 10, nprobe = 2, rerank = 60)
       .queryExecution.sparkPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -303,13 +301,13 @@ class IncrementalIndexSpec extends SparkSpec {
       dim = 24, m = 4, ksub = 8)
 
     def ensureIncFull(): String =
-      Similarity.ensureIncrementalIvfPqResidual(spark, "incivfpqres", src,
-        "vec_id", "embedding", cents, cbs)
+      Ivf(Pq(cbs = cbs), residual = true, centroids = cents)
+        .ensureIncremental(spark, "incivfpqres", src, "vec_id", "embedding")
 
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label", "embedding",
+      Ivf(Pq(), residual = true).probe(spark, idx, "vec_id", "embedding",
         q, k = 10, nprobe = 2, rerank = 60).as[(Long, Double)].collect().toSeq
 
     val i1 = ensureIncFull()
@@ -319,8 +317,8 @@ class IncrementalIndexSpec extends SparkSpec {
     // monolithic twin: the REAL monolithic builder relearns the same
     // deterministic learners over the same corpus
     val mono1 = tmpDir("inc-ivfpqres-mono1")
-    Similarity.buildIvfPqResidual(initial, "vec_id", "embedding", mono1,
-      k = 6, dim = 24, m = 4, ksub = 8)
+    Ivf(Pq(dim = 24, m = 4, ksub = 8), k = 6, residual = true)
+      .build(initial, "vec_id", "embedding", mono1)
     assert(probe(mono1) == probe(i1))
 
     // --- a new hour arrives
@@ -332,9 +330,9 @@ class IncrementalIndexSpec extends SparkSpec {
     // (the incremental contract: the quantizer/codebooks move only on a
     // periodic full rebuild)
     val part2 = tmpDir("inc-ivfpqres-mono2-part")
-    Similarity.buildIvfPqResidualPart(all.drop("label"), "vec_id", "embedding",
-      cents, cbs, part2)
-    Similarity.mergeIvfPq(spark, cbs, Seq(part2), mono2)
+    Ivf(Pq(cbs = cbs), residual = true, centroids = cents)
+      .part(all.drop("label"), "vec_id", "embedding", part2)
+    Ivf(Pq(cbs = cbs)).merge(spark, Seq(part2), mono2)
     val fs = new org.apache.hadoop.fs.Path(mono2)
       .getFileSystem(spark.sessionState.newHadoopConf())
     org.apache.hadoop.fs.FileUtil.copy(fs,
@@ -358,16 +356,16 @@ class IncrementalIndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
 
     def probeSq8(idx: String): Seq[(Long, Double)] =
-      Similarity.sq8AdcRerank(spark, idx, all.drop("label"), "vec_id",
+      Sq8().probe(spark, idx, all.drop("label"), "vec_id",
         "embedding", q, k = 10, rerank = 60).as[(Long, Double)].collect().toSeq
     def probeBq(idx: String): Seq[(Long, Double)] =
-      Similarity.bqHammingRerank(spark, idx, all.drop("label"), "vec_id",
+      Bq().probe(spark, idx, all.drop("label"), "vec_id",
         "embedding", q, k = 10, rerank = 60).as[(Long, Double)].collect().toSeq
 
     def incSq8(): String =
-      Similarity.ensureIncrementalSq8(spark, "incsq8", src, "vec_id", "embedding", prm)
+      Sq8(prm = prm).ensureIncremental(spark, "incsq8", src, "vec_id", "embedding")
     def incBq(): String =
-      Similarity.ensureIncrementalBq(spark, "incbq", src, "vec_id", "embedding", thr)
+      Bq(thr = thr).ensureIncremental(spark, "incbq", src, "vec_id", "embedding")
 
     val s1 = incSq8()
     assert(incSq8() == s1) // idempotent cache hit
@@ -377,10 +375,10 @@ class IncrementalIndexSpec extends SparkSpec {
     // deterministic, so buildSq8/buildBq relearn identical params and
     // the probes must agree exactly
     val monoS = tmpDir("inc-sq8-mono")
-    Similarity.buildSq8(initial, "vec_id", "embedding", monoS, dim = 24)
+    Sq8(dim = 24).build(initial, "vec_id", "embedding", monoS)
     assert(probeSq8(s1) == probeSq8(monoS))
     val monoB = tmpDir("inc-bq-mono")
-    Similarity.buildBq(initial, "vec_id", "embedding", monoB, dim = 24)
+    Bq(dim = 24).build(initial, "vec_id", "embedding", monoB)
     assert(probeBq(b1) == probeBq(monoB))
 
     // --- a new hour arrives: only that partition encodes (frozen params)
@@ -390,14 +388,14 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(s2 != s1 && b2 != b1)
     // monolithic-with-frozen-params twins over the combined corpus
     val monoS2p = tmpDir("inc-sq8-mono2-part")
-    Similarity.buildSq8Part(all.drop("label"), "vec_id", "embedding", prm, monoS2p)
+    Sq8(prm = prm).part(all.drop("label"), "vec_id", "embedding", monoS2p)
     val monoS2 = tmpDir("inc-sq8-mono2")
-    Similarity.mergeSq8(spark, prm, Seq(monoS2p), monoS2)
+    Sq8(prm = prm).merge(spark, Seq(monoS2p), monoS2)
     assert(probeSq8(s2) == probeSq8(monoS2))
     val monoB2p = tmpDir("inc-bq-mono2-part")
-    Similarity.buildBqPart(all.drop("label"), "vec_id", "embedding", thr, monoB2p)
+    Bq(thr = thr).part(all.drop("label"), "vec_id", "embedding", monoB2p)
     val monoB2 = tmpDir("inc-bq-mono2")
-    Similarity.mergeBq(spark, thr, Seq(monoB2p), monoB2)
+    Bq(thr = thr).merge(spark, Seq(monoB2p), monoB2)
     assert(probeBq(b2) == probeBq(monoB2))
   }
 
@@ -415,13 +413,13 @@ class IncrementalIndexSpec extends SparkSpec {
     def ensureInc(): String =
       IndexStore.ensureIncremental("incivf", spark, src) { (part, tmp) =>
         partBuilds += 1
-        Similarity.buildIvfPart(spark.read.parquet(part), "vec_id", "embedding", cents, tmp)
-      } { (parts, tmp) => Similarity.mergeIvf(spark, parts, tmp) }
+        Ivf(centroids = cents).part(spark.read.parquet(part), "vec_id", "embedding", tmp)
+      } { (parts, tmp) => Ivf().merge(spark, parts, tmp) }
 
     def probe(idx: String, nprobe: Int): Seq[(Long, Double)] = {
       val q = all.filter(col("vec_id") === 0)
         .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
-      Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding", q,
+      Ivf().probe(spark, idx, "vec_id", "embedding", q,
         k = 10, nprobe = nprobe).as[(Long, Double)].collect().toSeq
     }
 
@@ -430,9 +428,9 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(ensureInc() == i1 && partBuilds == 2) // idempotent cache hit
     // monolithic twin: same frozen assignment over the same corpus
     val mono1 = tmpDir("inc-ivf-mono1")
-    Similarity.buildIvf(
+    Ivf().build(
       initial.withColumn("label", Similarity.assignCell("embedding", cents)),
-      "vec_id", "label", "embedding", mono1)
+      "vec_id", "embedding", mono1)
     (1 to 3).foreach(np => assert(probe(i1, np) == probe(mono1, np), s"nprobe=$np"))
 
     // --- a new hour of vectors arrives
@@ -440,9 +438,9 @@ class IncrementalIndexSpec extends SparkSpec {
     val i2 = ensureInc()
     assert(partBuilds == 3, "only the appended partition may build")
     val mono2 = tmpDir("inc-ivf-mono2")
-    Similarity.buildIvf(
+    Ivf().build(
       all.drop("label").withColumn("label", Similarity.assignCell("embedding", cents)),
-      "vec_id", "label", "embedding", mono2)
+      "vec_id", "embedding", mono2)
     (1 to 3).foreach(np => assert(probe(i2, np) == probe(mono2, np), s"nprobe=$np"))
   }
 }

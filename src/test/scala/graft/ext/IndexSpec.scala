@@ -90,20 +90,20 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
     val shared = tmpDir("ivf-shared"); val sharedBq = tmpDir("ivf-shared-bq")
-    Similarity.buildIvfSq8BqShared(emb, "vec_id", "embedding", shared, sharedBq,
-      cents, dim = 64)
+    Ivf(Sq8(dim = 64), centroids = cents).build(emb, "vec_id", "embedding", shared,
+      also = Seq(Bq(dim = 64) -> sharedBq))
     val sq8Sep = tmpDir("ivf-sq8-sep"); val bqSep = tmpDir("ivf-bq-sep")
     // the separate builds learn the same deterministic centroids
-    Similarity.buildIvfSq8(emb, "vec_id", "embedding", sq8Sep, k = 8, dim = 64)
-    Similarity.buildIvfBq(emb, "vec_id", "embedding", bqSep, k = 8, dim = 64)
+    Ivf(Sq8(dim = 64), k = 8).build(emb, "vec_id", "embedding", sq8Sep)
+    Ivf(Bq(dim = 64), k = 8).build(emb, "vec_id", "embedding", bqSep)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
-    assert(rows(Similarity.ivfSq8Probe(spark, shared, "vec_id", "label", "embedding", q)) ==
-      rows(Similarity.ivfSq8Probe(spark, sq8Sep, "vec_id", "label", "embedding", q)),
+    assert(rows(Ivf(Sq8()).probe(spark, shared, "vec_id", "embedding", q)) ==
+      rows(Ivf(Sq8()).probe(spark, sq8Sep, "vec_id", "embedding", q)),
       "shared-base SQ8 probe diverged from the separate build")
-    assert(rows(Similarity.ivfBqProbe(spark, sharedBq, "vec_id", "label", "embedding", q,
+    assert(rows(Ivf(Bq()).probe(spark, sharedBq, "vec_id", "embedding", q,
         vectorsDir = Some(shared))) ==
-      rows(Similarity.ivfBqProbe(spark, bqSep, "vec_id", "label", "embedding", q)),
+      rows(Ivf(Bq()).probe(spark, bqSep, "vec_id", "embedding", q)),
       "shared-base BQ probe diverged from the separate build")
   }
 
@@ -119,26 +119,26 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
     val one = tmpDir("ivf-chunk-one"); val oneBq = tmpDir("ivf-chunk-one-bq")
-    Similarity.buildIvfSq8BqShared(emb, "vec_id", "embedding", one, oneBq,
-      cents, dim = 64)
+    Ivf(Sq8(dim = 64), centroids = cents).build(emb, "vec_id", "embedding", one,
+      also = Seq(Bq(dim = 64) -> oneBq))
     val chk = tmpDir("ivf-chunk-many"); val chkBq = tmpDir("ivf-chunk-many-bq")
-    Similarity.buildIvfSq8BqSharedChunked(emb, "vec_id", "embedding", chk, chkBq,
-      cents, dim = 64, ranges = 3) // ranges not dividing K exercises the bounds
+    Ivf(Sq8(dim = 64), centroids = cents).build(emb, "vec_id", "embedding", chk,
+      chunks = 3, also = Seq(Bq(dim = 64) -> chkBq)) // chunks not dividing K exercises the bounds
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
-    assert(rows(Similarity.ivfSq8Probe(spark, chk, "vec_id", "label", "embedding", q)) ==
-      rows(Similarity.ivfSq8Probe(spark, one, "vec_id", "label", "embedding", q)),
+    assert(rows(Ivf(Sq8()).probe(spark, chk, "vec_id", "embedding", q)) ==
+      rows(Ivf(Sq8()).probe(spark, one, "vec_id", "embedding", q)),
       "chunked-build SQ8 probe diverged from the one-shot build")
-    assert(rows(Similarity.ivfBqProbe(spark, chkBq, "vec_id", "label", "embedding", q,
+    assert(rows(Ivf(Bq()).probe(spark, chkBq, "vec_id", "embedding", q,
         vectorsDir = Some(chk))) ==
-      rows(Similarity.ivfBqProbe(spark, oneBq, "vec_id", "label", "embedding", q,
+      rows(Ivf(Bq()).probe(spark, oneBq, "vec_id", "embedding", q,
         vectorsDir = Some(one))),
       "chunked-build BQ probe diverged from the one-shot build")
     // and batch probes over the chunked layout work too (the batch
     // scan pruning must tolerate the appended multi-file label dirs)
     val queries = graft.Tables.embeddings(spark, sf).filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    assert(Similarity.ivfSq8ProbeBatch(spark, chk, "vec_id", "label", "embedding",
+    assert(Ivf(Sq8()).probeBatch(spark, chk, "vec_id", "embedding",
       queries, "qid", "qvec", k = 5, nprobe = 2, rerank = 20).count() > 0)
   }
 
@@ -272,11 +272,11 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val rest = emb.filter(col("vec_id") =!= 0)
     val idx = tmpDir("idx-ivf")
-    Similarity.buildIvf(rest, "vec_id", "label", "embedding", idx)
+    Ivf().build(rest, "vec_id", "embedding", idx)
     for (nprobe <- Seq(1, 2, 3)) {
       val oneShot = Similarity.ivfTopK(rest, "vec_id", "label", "embedding", q,
         k = 10, nprobe = nprobe).as[(Long, Double)].collect().toSeq
-      val probed = Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding", q,
+      val probed = Ivf().probe(spark, idx, "vec_id", "embedding", q,
         k = 10, nprobe = nprobe).as[(Long, Double)].collect().toSeq
       assert(probed == oneShot, s"nprobe=$nprobe")
     }
@@ -287,9 +287,8 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivf-plan")
-    Similarity.buildIvf(emb.filter(col("vec_id") =!= 0),
-      "vec_id", "label", "embedding", idx)
-    val probe = Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding", q, k = 10)
+    Ivf().build(emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", idx)
+    val probe = Ivf().probe(spark, idx, "vec_id", "embedding", q, k = 10, nprobe = 1)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     // every scan reads the index, none the raw corpus
@@ -309,9 +308,9 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfpq-plan")
-    Similarity.buildIvfPq(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val probe = Similarity.ivfPqProbe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(
+      emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx)
+    val probe = Ivf(Pq()).probe(spark, idx, "vec_id", "embedding",
       q, k = 10, nprobe = 2, rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
@@ -341,9 +340,9 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfsq8-plan")
-    Similarity.buildIvfSq8(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64)
-    val probe = Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Sq8(dim = 64), k = 8).build(emb.filter(col("vec_id") =!= 0).drop("label"),
+      "vec_id", "embedding", idx)
+    val probe = Ivf(Sq8()).probe(spark, idx, "vec_id", "embedding",
       q, k = 10, nprobe = 2, rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
@@ -370,15 +369,15 @@ class IndexSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 3).drop("label")
     val idx = tmpDir("idx-sq8-guard")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", idx, dim = 64)
+    Sq8(dim = 64).build(corpus, "vec_id", "embedding", idx)
     val bad = emb.filter(col("vec_id") < 3)
       .select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))
     intercept[IllegalArgumentException] {
-      Similarity.sq8ProbeBatch(spark, idx, corpus, "vec_id", "embedding",
+      Sq8().probeBatch(spark, idx, corpus, "vec_id", "embedding",
         bad, "vec_id", "embedding")
     }
     val empty = emb.filter(col("vec_id") < 0)
-    assert(Similarity.sq8ProbeBatch(spark, idx, corpus, "vec_id", "embedding",
+    assert(Sq8().probeBatch(spark, idx, corpus, "vec_id", "embedding",
       empty, "vec_id", "embedding").count() == 0)
   }
 
@@ -387,9 +386,9 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfopq-plan")
-    Similarity.buildIvfOpq(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val probe = Similarity.ivfOpqProbe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Opq(Pq(dim = 64, m = 4, ksub = 16)), k = 8).build(
+      emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx)
+    val probe = Ivf(Opq()).probe(spark, idx, "vec_id", "embedding",
       q, k = 10, nprobe = 2, rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
@@ -448,26 +447,25 @@ class IndexSpec extends SparkSpec {
       assert(probe.count() > 0)
     }
     val idxPq = tmpDir("idx-ivfpq-batchplan")
-    Similarity.buildIvfPq(corpus, "vec_id", "embedding", idxPq,
-      k = 8, dim = 64, m = 4, ksub = 16)
-    pinned("ivf_pq_batch", Similarity.ivfPqProbeBatch(spark, idxPq,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(corpus, "vec_id", "embedding", idxPq)
+    pinned("ivf_pq_batch", Ivf(Pq()).probeBatch(spark, idxPq,
+      "vec_id", "embedding", queries, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50), Seq("codes", "vectors"))
     val idxRes = tmpDir("idx-ivfpqres-batchplan")
-    Similarity.buildIvfPqResidual(corpus, "vec_id", "embedding", idxRes,
-      k = 8, dim = 64, m = 4, ksub = 16)
-    pinned("ivf_pq_residual_batch", Similarity.ivfPqProbeBatch(spark, idxRes,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8, residual = true)
+      .build(corpus, "vec_id", "embedding", idxRes)
+    pinned("ivf_pq_residual_batch", Ivf(Pq(), residual = true).probeBatch(spark, idxRes,
+      "vec_id", "embedding", queries, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50), Seq("codes", "vectors"))
     val idxS = tmpDir("idx-ivfsq8-batchplan")
-    Similarity.buildIvfSq8(corpus, "vec_id", "embedding", idxS, k = 8, dim = 64)
-    pinned("ivf_sq8_batch", Similarity.ivfSq8ProbeBatch(spark, idxS,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
+    Ivf(Sq8(dim = 64), k = 8).build(corpus, "vec_id", "embedding", idxS)
+    pinned("ivf_sq8_batch", Ivf(Sq8()).probeBatch(spark, idxS,
+      "vec_id", "embedding", queries, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50), Seq("codes", "vectors"))
     val idxB = tmpDir("idx-ivfbq-batchplan")
-    Similarity.buildIvfBq(corpus, "vec_id", "embedding", idxB, k = 8, dim = 64)
-    pinned("ivf_bq_batch", Similarity.ivfBqProbeBatch(spark, idxB,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
+    Ivf(Bq(dim = 64), k = 8).build(corpus, "vec_id", "embedding", idxB)
+    pinned("ivf_bq_batch", Ivf(Bq()).probeBatch(spark, idxB,
+      "vec_id", "embedding", queries, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50), Seq("words", "vectors"))
   }
 
@@ -483,9 +481,9 @@ class IndexSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 3).drop("label")
     val idx = tmpDir("idx-ivfsq8-confscope")
-    Similarity.buildIvfSq8(corpus, "vec_id", "embedding", idx, k = 8, dim = 64)
-    val probe = Similarity.ivfSq8ProbeBatch(spark, idx,
-      "vec_id", "label", "embedding", emb.filter(col("vec_id") < 3),
+    Ivf(Sq8(dim = 64), k = 8).build(corpus, "vec_id", "embedding", idx)
+    val probe = Ivf(Sq8()).probeBatch(spark, idx,
+      "vec_id", "embedding", emb.filter(col("vec_id") < 3),
       "vec_id", "embedding", k = 10, nprobe = 2, rerank = 50)
     assert(probe.count() > 0)
     assert(spark.conf.getOption(key) == before,
@@ -505,7 +503,7 @@ class IndexSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 3).drop("label")
     val idx = tmpDir("idx-sq8-censusjobs")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", idx, dim = 64)
+    Sq8(dim = 64).build(corpus, "vec_id", "embedding", idx)
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
@@ -517,7 +515,7 @@ class IndexSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      Similarity.sq8ProbeBatch(spark, idx, corpus, "vec_id", "embedding",
+      Sq8().probeBatch(spark, idx, corpus, "vec_id", "embedding",
         queries, "qid", "qvec") // constructed, never executed
       org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
       // measured construction budget: 2 AQE sub-jobs each for the two
@@ -537,9 +535,9 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfbq-plan")
-    Similarity.buildIvfBq(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64)
-    val probe = Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding",
+    Ivf(Bq(dim = 64), k = 8).build(emb.filter(col("vec_id") =!= 0).drop("label"),
+      "vec_id", "embedding", idx)
+    val probe = Ivf(Bq()).probe(spark, idx, "vec_id", "embedding",
       q, k = 10, nprobe = 2, rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
@@ -564,9 +562,9 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfpqres-plan")
-    Similarity.buildIvfPqResidual(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val probe = Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label",
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8, residual = true).build(
+      emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx)
+    val probe = Ivf(Pq(), residual = true).probe(spark, idx, "vec_id",
       "embedding", q, k = 10, nprobe = 2, rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
@@ -589,9 +587,9 @@ class IndexSpec extends SparkSpec {
   test("ivfPqProbeBatch equals a loop of single-query probes; windows all qid-partitioned") {
     val emb = graft.Tables.embeddings(spark, sf)
     val idx = tmpDir("idx-ivfpq-batch")
-    Similarity.buildIvfPq(emb.filter(col("vec_id") >= 3).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val batch = Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label",
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(
+      emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", idx)
+    val batch = Ivf(Pq()).probeBatch(spark, idx, "vec_id",
       "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
     // one distributed pass must produce EXACTLY what the driver loop of
@@ -601,7 +599,7 @@ class IndexSpec extends SparkSpec {
     (0L to 2L).foreach { qid =>
       val q = emb.filter(col("vec_id") === qid)
         .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
-      val single = Similarity.ivfPqProbe(spark, idx, "vec_id", "label",
+      val single = Ivf(Pq()).probe(spark, idx, "vec_id",
         "embedding", q, k = 10, nprobe = 2, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(got(qid) == single, s"batch result for query $qid diverges from the single probe")
@@ -617,7 +615,7 @@ class IndexSpec extends SparkSpec {
     // and candidate sets take the SHUFFLE path (the broadcast hints are
     // structurally absent from the analyzed plan), with per-query
     // results identical to the broadcast path
-    val shuffled = Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label",
+    val shuffled = Ivf(Pq()).probeBatch(spark, idx, "vec_id",
       "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50, broadcastMaxRows = 0L)
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
@@ -631,6 +629,52 @@ class IndexSpec extends SparkSpec {
       .groupBy(_._1).view.mapValues(_.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3)).toSeq).toMap
     assert(shuffledGot == got,
       "shuffle-path batch probe diverges from the broadcast path")
+  }
+
+  test("a rebuild at the same path with a new geometry probes like a fresh build") {
+    // builders overwrite caller-chosen paths; the probe-side schema
+    // memo must not outlive the overwrite (an m=8 rebuild read with the
+    // m=4 codes schema loses or nulls code columns)
+    val emb = graft.Tables.embeddings(spark, sf)
+    val q = emb.filter(col("vec_id") === 0)
+      .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
+    val corpus = emb.filter(col("vec_id") =!= 0).drop("label")
+    def probe(idx: String): Seq[String] = Ivf(Pq()).probe(spark, idx, "vec_id",
+      "embedding", q, k = 10, nprobe = 2, rerank = 50).collect().map(_.toString).toSeq
+    val reused = tmpDir("idx-rebuild")
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(corpus, "vec_id", "embedding", reused)
+    assert(probe(reused).size == 10)
+    Ivf(Pq(dim = 64, m = 8, ksub = 16), k = 8).build(corpus, "vec_id", "embedding", reused)
+    val fresh = tmpDir("idx-rebuild-fresh")
+    Ivf(Pq(dim = 64, m = 8, ksub = 16), k = 8).build(corpus, "vec_id", "embedding", fresh)
+    assert(probe(reused) == probe(fresh), "rebuilt index probed with a stale schema")
+  }
+
+  test("PQ batch dot tables ride the probe set only while their bytes fit the collect gate") {
+    // 3 queries x 64 dims x 8 B = 1536 B of query frame fits a 2000 B
+    // budget; 3 x nprobe 2 x m 4 x ksub 16 x 8 B = 3072 B of per-(query,
+    // cell) dot tables does not — the probe must take the codebook-
+    // literal path, still equal to a loop of single probes
+    val emb = graft.Tables.embeddings(spark, sf)
+    val idx = tmpDir("idx-ivfpq-tabgate")
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8).build(
+      emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", idx)
+    System.setProperty("graft.batchquery.collect.maxbytes", "2000")
+    try {
+      val batch = Ivf(Pq()).probeBatch(spark, idx, "vec_id", "embedding",
+        emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, nprobe = 2, rerank = 50)
+      assert(!batch.queryExecution.analyzed.toString.contains("__tab"),
+        "per-query dot tables rode the probe set above the byte gate")
+      val got = batch.as[(Long, Long, Double)].collect()
+        .groupBy(_._1).view.mapValues(_.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3)).toSeq).toMap
+      (0L to 2L).foreach { qid =>
+        val q = emb.filter(col("vec_id") === qid)
+          .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
+        val single = Ivf(Pq()).probe(spark, idx, "vec_id", "embedding", q,
+          k = 10, nprobe = 2, rerank = 50).as[(Long, Double)].collect().toSeq
+        assert(got(qid) == single, s"gated batch result for query $qid diverges")
+      }
+    } finally System.clearProperty("graft.batchquery.collect.maxbytes")
   }
 
   test("sq8/ivfSq8/bq batch probes equal loops of single probes; windows qid-partitioned") {
@@ -652,73 +696,71 @@ class IndexSpec extends SparkSpec {
     }
 
     val sq8 = tmpDir("idx-sq8-batch")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", sq8, dim = 64)
-    val sq8Batch = Similarity.sq8ProbeBatch(spark, sq8, corpus, "vec_id",
+    Sq8(dim = 64).build(corpus, "vec_id", "embedding", sq8)
+    val sq8Batch = Sq8().probeBatch(spark, sq8, corpus, "vec_id",
       "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
     val sq8Got = byQid(sq8Batch)
     pinQidWindows(sq8Batch, "sq8")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.sq8AdcRerank(spark, sq8, corpus, "vec_id",
+      val single = Sq8().probe(spark, sq8, corpus, "vec_id",
         "embedding", queryOf(qid), k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(sq8Got(qid) == single, s"sq8 batch diverges from single probe for $qid")
     }
     // shuffle path (gate forced off) must be result-identical
-    assert(byQid(Similarity.sq8ProbeBatch(spark, sq8, corpus, "vec_id",
+    assert(byQid(Sq8().probeBatch(spark, sq8, corpus, "vec_id",
       "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50,
       broadcastMaxRows = 0L)) == sq8Got, "sq8 shuffle path diverges")
 
     val ivfSq8 = tmpDir("idx-ivfsq8-batch")
-    Similarity.buildIvfSq8(corpus, "vec_id", "embedding", ivfSq8,
-      k = 8, dim = 64)
-    val ivfBatch = Similarity.ivfSq8ProbeBatch(spark, ivfSq8, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
+    Ivf(Sq8(dim = 64), k = 8).build(corpus, "vec_id", "embedding", ivfSq8)
+    val ivfBatch = Ivf(Sq8()).probeBatch(spark, ivfSq8, "vec_id",
+      "embedding", queriesDf, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
     val ivfGot = byQid(ivfBatch)
     pinQidWindows(ivfBatch, "ivfSq8")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.ivfSq8Probe(spark, ivfSq8, "vec_id", "label",
+      val single = Ivf(Sq8()).probe(spark, ivfSq8, "vec_id",
         "embedding", queryOf(qid), k = 10, nprobe = 2, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(ivfGot(qid) == single, s"ivfSq8 batch diverges from single probe for $qid")
     }
-    assert(byQid(Similarity.ivfSq8ProbeBatch(spark, ivfSq8, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
+    assert(byQid(Ivf(Sq8()).probeBatch(spark, ivfSq8, "vec_id",
+      "embedding", queriesDf, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50, broadcastMaxRows = 0L)) == ivfGot,
       "ivfSq8 shuffle path diverges")
 
     val bq = tmpDir("idx-bq-batch")
-    Similarity.buildBq(corpus, "vec_id", "embedding", bq, dim = 64)
-    val bqBatch = Similarity.bqProbeBatch(spark, bq, corpus, "vec_id",
+    Bq(dim = 64).build(corpus, "vec_id", "embedding", bq)
+    val bqBatch = Bq().probeBatch(spark, bq, corpus, "vec_id",
       "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
     val bqGot = byQid(bqBatch)
     pinQidWindows(bqBatch, "bq")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.bqHammingRerank(spark, bq, corpus, "vec_id",
+      val single = Bq().probe(spark, bq, corpus, "vec_id",
         "embedding", queryOf(qid), k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(bqGot(qid) == single, s"bq batch diverges from single probe for $qid")
     }
-    assert(byQid(Similarity.bqProbeBatch(spark, bq, corpus, "vec_id",
+    assert(byQid(Bq().probeBatch(spark, bq, corpus, "vec_id",
       "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50,
       broadcastMaxRows = 0L)) == bqGot, "bq shuffle path diverges")
 
     val ivfBq = tmpDir("idx-ivfbq-batch")
-    Similarity.buildIvfBq(corpus, "vec_id", "embedding", ivfBq,
-      k = 8, dim = 64)
-    val ivfBqBatch = Similarity.ivfBqProbeBatch(spark, ivfBq, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
+    Ivf(Bq(dim = 64), k = 8).build(corpus, "vec_id", "embedding", ivfBq)
+    val ivfBqBatch = Ivf(Bq()).probeBatch(spark, ivfBq, "vec_id",
+      "embedding", queriesDf, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
     val ivfBqGot = byQid(ivfBqBatch)
     pinQidWindows(ivfBqBatch, "ivfBq")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.ivfBqProbe(spark, ivfBq, "vec_id", "label",
+      val single = Ivf(Bq()).probe(spark, ivfBq, "vec_id",
         "embedding", queryOf(qid), k = 10, nprobe = 2, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(ivfBqGot(qid) == single, s"ivfBq batch diverges from single probe for $qid")
     }
-    assert(byQid(Similarity.ivfBqProbeBatch(spark, ivfBq, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
+    assert(byQid(Ivf(Bq()).probeBatch(spark, ivfBq, "vec_id",
+      "embedding", queriesDf, "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50, broadcastMaxRows = 0L)) == ivfBqGot,
       "ivfBq shuffle path diverges")
   }
@@ -730,9 +772,9 @@ class IndexSpec extends SparkSpec {
     // probe's literal-CASE term EXACTLY, query by query
     val emb = graft.Tables.embeddings(spark, sf)
     val idx = tmpDir("idx-ivfpqres-batch")
-    Similarity.buildIvfPqResidual(emb.filter(col("vec_id") >= 3).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val batch = Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label",
+    Ivf(Pq(dim = 64, m = 4, ksub = 16), k = 8, residual = true).build(
+      emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", idx)
+    val batch = Ivf(Pq(), residual = true).probeBatch(spark, idx, "vec_id",
       "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       k = 10, nprobe = 2, rerank = 50)
     val got = batch.as[(Long, Long, Double)].collect()
@@ -740,7 +782,7 @@ class IndexSpec extends SparkSpec {
     (0L to 2L).foreach { qid =>
       val q = emb.filter(col("vec_id") === qid)
         .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
-      val single = Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label",
+      val single = Ivf(Pq(), residual = true).probe(spark, idx, "vec_id",
         "embedding", q, k = 10, nprobe = 2, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(got(qid) == single,
@@ -762,7 +804,7 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
 
     val sq8 = tmpDir("idx-sq8")
-    Similarity.buildSq8(rest, "vec_id", "embedding", sq8, dim = 64)
+    Sq8(dim = 64).build(rest, "vec_id", "embedding", sq8)
     assert(spark.read.parquet(s"$sq8/params").count() == 64)
     val codes = spark.read.parquet(s"$sq8/codes")
     assert(codes.count() == n)
@@ -771,7 +813,7 @@ class IndexSpec extends SparkSpec {
     assert(codes.schema("codes").dataType ==
       org.apache.spark.sql.types.BinaryType)
     assert(codes.filter(length(col("codes")) =!= 64).count() == 0)
-    val probe = Similarity.sq8AdcRerank(spark, sq8, rest, "vec_id", "embedding", q7)
+    val probe = Sq8().probe(spark, sq8, rest, "vec_id", "embedding", q7)
     // self-query: SQ8 reconstruction ranks the vector itself first at
     // exact cos 1.0 after the rerank
     val top = probe.as[(Long, Double)].collect()
@@ -783,7 +825,7 @@ class IndexSpec extends SparkSpec {
       s"unexpected scans: $roots")
 
     val bq = tmpDir("idx-bq")
-    Similarity.buildBq(rest, "vec_id", "embedding", bq, dim = 64)
+    Bq(dim = 64).build(rest, "vec_id", "embedding", bq)
     assert(spark.read.parquet(s"$bq/params").count() == 64)
     val words = spark.read.parquet(s"$bq/words")
     assert(words.count() == n)
@@ -792,7 +834,7 @@ class IndexSpec extends SparkSpec {
     // self-query at rerank=corpus (plumbing, not selectivity — Hamming-0
     // ties inside a tight cluster can outnumber a small rerank budget;
     // RecallSpec owns the quality floor)
-    val topBq = Similarity.bqHammingRerank(spark, bq, rest, "vec_id", "embedding",
+    val topBq = Bq().probe(spark, bq, rest, "vec_id", "embedding",
       q7, rerank = n.toInt).as[(Long, Double)].collect()
     assert(topBq.head == ((7L, 1.0)), s"bq self-query top: ${topBq.head}")
     rest.unpersist()

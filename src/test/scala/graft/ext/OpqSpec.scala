@@ -93,8 +93,8 @@ class OpqSpec extends SparkSpec {
 
   test("OPQ beats plain PQ where rotation provably helps (distortion + candidates)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-opq-recall").toString
-    Similarity.buildPq(corpus, "vec_id", "embedding", s"$dir/pq", Dims, M, Ksub)
-    Similarity.buildOpq(corpus, "vec_id", "embedding", s"$dir/opq", Dims, M, Ksub)
+    Pq(Dims, M, Ksub).build(corpus, "vec_id", "embedding", s"$dir/pq")
+    Opq(Pq(Dims, M, Ksub)).build(corpus, "vec_id", "embedding", s"$dir/opq")
     val pqCbs = Similarity.readPqCodebooks(spark, s"$dir/pq")
     val opqCbs = Similarity.readPqCodebooks(spark, s"$dir/opq")
     val rot = Similarity.readOpqRotation(spark, s"$dir/opq")
@@ -132,12 +132,12 @@ class OpqSpec extends SparkSpec {
     val opqCodes = spark.read.parquet(s"$dir/opq/codes").cache()
     val rerank = 50
     val pqCand = meanRecall { (qid, q) =>
-      ids(Similarity.pqAdcTopK(pqCodes.filter(col("vec_id") =!= qid),
-        "vec_id", pqCbs, q, rerank))
+      ids(Pq(cbs = pqCbs).candidates(pqCodes.filter(col("vec_id") =!= qid),
+        "vec_id", q, rerank))
     }
     val opqCand = meanRecall { (qid, q) =>
-      ids(Similarity.pqAdcTopK(opqCodes.filter(col("vec_id") =!= qid),
-        "vec_id", opqCbs, Similarity.rotateQuery(q, rot), rerank))
+      ids(Pq(cbs = opqCbs).candidates(opqCodes.filter(col("vec_id") =!= qid),
+        "vec_id", Similarity.rotateQuery(q, rot), rerank))
     }
     info(f"true-top-10 candidate recall@$rerank: pq=$pqCand%.3f opq=$opqCand%.3f")
     assert(opqCand >= pqCand,
@@ -145,7 +145,7 @@ class OpqSpec extends SparkSpec {
 
     // (3) the composed probe (ADC + exact rerank) end to end
     val composed = meanRecall { (qid, q) =>
-      ids(Similarity.opqRerank(spark, s"$dir/opq",
+      ids(Opq().probe(spark, s"$dir/opq",
         corpus.filter(col("vec_id") =!= qid), "vec_id", "embedding", q,
         k = TopK, rerank = 100))
     }
@@ -163,19 +163,18 @@ class OpqSpec extends SparkSpec {
     // composed serving shape.
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfopq-recall").toString
     val idxCorpus = corpus.filter(col("vec_id") >= NQueries)
-    Similarity.buildIvfPq(idxCorpus, "vec_id", "embedding", s"$dir/ivfpq",
-      k = 8, dim = Dims, m = M, ksub = Ksub)
-    Similarity.buildIvfOpq(idxCorpus, "vec_id", "embedding", s"$dir/ivfopq",
-      k = 8, dim = Dims, m = M, ksub = Ksub)
+    Ivf(Pq(Dims, M, Ksub), k = 8).build(idxCorpus, "vec_id", "embedding", s"$dir/ivfpq")
+    Ivf(Opq(Pq(Dims, M, Ksub)), k = 8).build(idxCorpus, "vec_id", "embedding",
+      s"$dir/ivfopq")
     def recallOf(probe: Seq[Double] => Seq[Long]): Double =
       queries.map { case (_, q) =>
         val exact = ids(Similarity.cosineTopK(idxCorpus, "vec_id", "embedding", q, TopK))
         exact.toSet.intersect(probe(q).toSet).size.toDouble / exact.size
       }.sum / queries.size
-    val pq = recallOf(q => ids(Similarity.ivfPqProbe(spark, s"$dir/ivfpq",
-      "vec_id", "label", "embedding", q, k = TopK, nprobe = 3, rerank = 50)))
-    val opq = recallOf(q => ids(Similarity.ivfOpqProbe(spark, s"$dir/ivfopq",
-      "vec_id", "label", "embedding", q, k = TopK, nprobe = 3, rerank = 50)))
+    val pq = recallOf(q => ids(Ivf(Pq()).probe(spark, s"$dir/ivfpq",
+      "vec_id", "embedding", q, k = TopK, nprobe = 3, rerank = 50)))
+    val opq = recallOf(q => ids(Ivf(Opq()).probe(spark, s"$dir/ivfopq",
+      "vec_id", "embedding", q, k = TopK, nprobe = 3, rerank = 50)))
     info(f"composed recall@$TopK (nprobe=3, rerank=50): ivf-pq=$pq%.3f ivf-opq=$opq%.3f")
     assert(opq >= pq,
       f"IVF-OPQ recall $opq%.3f below plain IVF-PQ $pq%.3f")
@@ -199,17 +198,16 @@ class OpqSpec extends SparkSpec {
     val sysProp = System.getProperty("graft.index.dir")
     System.setProperty("graft.index.dir", s"$base/indexes")
     try {
-      val idx = Similarity.ensureIncrementalIvfOpq(spark, "ivfopqincr",
-        s"$base/corpus", "vec_id", "embedding", rot, cents, cbs)
+      val ivfOpq = Ivf(Opq(Pq(cbs = cbs), r = rot), centroids = cents)
+      val idx = ivfOpq.ensureIncremental(spark, "ivfopqincr",
+        s"$base/corpus", "vec_id", "embedding")
       val mono = s"$base/mono"
-      Similarity.buildIvfOpqPart(corpus, "vec_id", "embedding", rot, cents,
-        cbs, s"$mono/p")
-      Similarity.mergeIvfPq(spark, cbs, Seq(s"$mono/p"), mono)
-      Similarity.writeOpqRotation(spark, rot, mono)
+      ivfOpq.part(corpus, "vec_id", "embedding", s"$mono/p")
+      ivfOpq.merge(spark, Seq(s"$mono/p"), mono)
       val q = queries.head._2
-      val inc = Similarity.ivfOpqProbe(spark, idx, "vec_id", "label",
+      val inc = Ivf(Opq()).probe(spark, idx, "vec_id",
         "embedding", q).collect().map(_.toString).toSeq
-      val mon = Similarity.ivfOpqProbe(spark, mono, "vec_id", "label",
+      val mon = Ivf(Opq()).probe(spark, mono, "vec_id",
         "embedding", q).collect().map(_.toString).toSeq
       assert(inc == mon, "incremental IVF-OPQ diverged from the monolithic merge")
     } finally {
@@ -229,18 +227,16 @@ class OpqSpec extends SparkSpec {
     val sysProp = System.getProperty("graft.index.dir")
     System.setProperty("graft.index.dir", s"$base/indexes")
     try {
-      val idx = Similarity.ensureIncrementalOpq(spark, "opqincr",
-        s"$base/corpus", "vec_id", "embedding", rot, cbs)
+      val idx = Opq(Pq(cbs = cbs), r = rot).ensureIncremental(spark, "opqincr",
+        s"$base/corpus", "vec_id", "embedding")
       // the merged incremental index serves the same results as a
       // monolithic build with the same frozen learners
       val mono = s"$base/mono"
-      Similarity.writeOpqRotation(spark, rot, mono)
-      Similarity.buildOpqPart(corpus, "vec_id", "embedding", rot, cbs, mono)
-      Similarity.mergePq(spark, cbs, Nil, mono) // writes codebooks only
+      Opq(Pq(cbs = cbs), r = rot).build(corpus, "vec_id", "embedding", mono)
       val q = queries.head._2
-      val inc = Similarity.opqRerank(spark, idx, corpus, "vec_id", "embedding", q)
+      val inc = Opq().probe(spark, idx, corpus, "vec_id", "embedding", q)
         .collect().map(_.toString).toSeq
-      val mon = Similarity.opqRerank(spark, mono, corpus, "vec_id", "embedding", q)
+      val mon = Opq().probe(spark, mono, corpus, "vec_id", "embedding", q)
         .collect().map(_.toString).toSeq
       assert(inc == mon, "incremental OPQ diverged from the monolithic build")
     } finally {

@@ -65,13 +65,14 @@ class RecallSpec extends SparkSpec {
     // those originals ranks the 10 — must hold a 0.9 floor.
     val cb = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
       dim = Dims, m = 4, ksub = 16)
-    val codes = Similarity.pqEncode(corpus, "vec_id", "embedding", cb).cache()
+    val codes = Pq(cbs = cb).encode(corpus, "vec_id", "embedding").cache()
     val raw = meanRecall { (qid, q) =>
-      dropSelf(Similarity.pqAdcTopK(codes, "vec_id", cb, q, TopK + 1), qid)
+      dropSelf(Pq(cbs = cb).candidates(codes, "vec_id", q, TopK + 1), qid)
     }
     val rr = meanRecall { (qid, q) =>
-      dropSelf(Similarity.pqAdcRerank(codes, corpus, "vec_id", "embedding",
-        cb, q, k = TopK + 1, rerank = 100), qid)
+      val cand = Pq(cbs = cb).candidates(codes, "vec_id", q, 100).select("vec_id")
+      dropSelf(Similarity.cosineTopK(corpus.join(broadcast(cand), "vec_id"),
+        "vec_id", "embedding", q, TopK + 1), qid)
     }
     info(f"pq raw-adc recall@$TopK = $raw%.3f; adc+rerank(100) = $rr%.3f")
     assert(raw < 0.5, f"raw ADC recall $raw%.3f unexpectedly high — fixture no longer clustered?")
@@ -91,10 +92,10 @@ class RecallSpec extends SparkSpec {
     // the final 10 — the composed floor must match the flat
     // ADC+rerank's 0.9, not degrade to the coarse quantizer's 0.8
     val idx = tmpDir("recall-ivfpq")
-    Similarity.buildIvfPq(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, dim = Dims, m = 4, ksub = 16)
+    Ivf(Pq(dim = Dims, m = 4, ksub = 16), k = K).build(corpus.drop("label"),
+      "vec_id", "embedding", idx)
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfPqProbe(spark, idx, "vec_id", "label", "embedding",
+      dropSelf(Ivf(Pq()).probe(spark, idx, "vec_id", "embedding",
         q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
     }
     info(f"ivf-adc nprobe=2 rerank=100 recall@$TopK = $r%.3f")
@@ -106,10 +107,9 @@ class RecallSpec extends SparkSpec {
     // the cell pruning is the only recall loss — the composed floor
     // must match the flat SQ8's, not degrade to the coarse quantizer's
     val idx = tmpDir("recall-ivfsq8")
-    Similarity.buildIvfSq8(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, dim = Dims)
+    Ivf(Sq8(dim = Dims), k = K).build(corpus.drop("label"), "vec_id", "embedding", idx)
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding",
+      dropSelf(Ivf(Sq8()).probe(spark, idx, "vec_id", "embedding",
         q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
     }
     info(f"ivf-sq8 nprobe=2 rerank=100 recall@$TopK = $r%.3f")
@@ -123,10 +123,9 @@ class RecallSpec extends SparkSpec {
     // resolution inside the probed cells, so the composed floor holds
     // the flat BQ's
     val idx = tmpDir("recall-ivfbq")
-    Similarity.buildIvfBq(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, dim = Dims)
+    Ivf(Bq(dim = Dims), k = K).build(corpus.drop("label"), "vec_id", "embedding", idx)
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding",
+      dropSelf(Ivf(Bq()).probe(spark, idx, "vec_id", "embedding",
         q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
     }
     info(f"ivf-bq nprobe=2 rerank=100 recall@$TopK = $r%.3f")
@@ -139,8 +138,8 @@ class RecallSpec extends SparkSpec {
     // offset ball — the resolution the flat-PQ test above shows raw
     // codes lack (0.16 recall@10 inside an 80-member cluster).
     val idx = tmpDir("recall-ivfpqres")
-    Similarity.buildIvfPqResidual(corpus.drop("label"), "vec_id", "embedding",
-      idx, k = K, dim = Dims, m = 4, ksub = 16)
+    Ivf(Pq(dim = Dims, m = 4, ksub = 16), k = K, residual = true)
+      .build(corpus.drop("label"), "vec_id", "embedding", idx)
     val cbs = Similarity.readPqCodebooks(spark, idx)
     val quant = Similarity.readQuantizer(spark, idx)
     val codes = spark.read.parquet(s"$idx/codes").cache()
@@ -151,19 +150,19 @@ class RecallSpec extends SparkSpec {
         when(col("label") === j,
           lit(c.zip(q).foldLeft(0.0) { case (a, (x, y)) => a + x * y }))
       } :+ lit(0.0)): _*)
-      dropSelf(Similarity.pqAdcTopK(codes, "vec_id", cbs, q, TopK + 1,
-        dotBase = cellDot), qid)
+      dropSelf(Pq(cbs = cbs).candidates(codes, "vec_id", q, TopK + 1,
+        base = cellDot), qid)
     }
     // the flat raw-ADC twin on the SAME corpus — the comparison is the
     // claim, so measure it here rather than hardcoding a margin
     val flatCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
       dim = Dims, m = 4, ksub = 16)
-    val flatCodes = Similarity.pqEncode(corpus, "vec_id", "embedding", flatCb).cache()
+    val flatCodes = Pq(cbs = flatCb).encode(corpus, "vec_id", "embedding").cache()
     val flatRaw = meanRecall { (qid, q) =>
-      dropSelf(Similarity.pqAdcTopK(flatCodes, "vec_id", flatCb, q, TopK + 1), qid)
+      dropSelf(Pq(cbs = flatCb).candidates(flatCodes, "vec_id", q, TopK + 1), qid)
     }
     val composed = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label",
+      dropSelf(Ivf(Pq(), residual = true).probe(spark, idx, "vec_id",
         "embedding", q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
     }
     info(f"raw-adc recall@$TopK: flat = $flatRaw%.3f, residual = $raw%.3f " +
@@ -186,15 +185,15 @@ class RecallSpec extends SparkSpec {
     // rerank > cluster size repairs rank resolution the same way it
     // does for PQ.
     val sq8 = tmpDir("recall-sq8")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", sq8, Dims)
+    Sq8(dim = Dims).build(corpus, "vec_id", "embedding", sq8)
     val rSq8 = meanRecall { (qid, q) =>
-      dropSelf(Similarity.sq8AdcRerank(spark, sq8, corpus, "vec_id",
+      dropSelf(Sq8().probe(spark, sq8, corpus, "vec_id",
         "embedding", q, k = TopK + 1, rerank = 100), qid)
     }
     val bq = tmpDir("recall-bq")
-    Similarity.buildBq(corpus, "vec_id", "embedding", bq, Dims)
+    Bq(dim = Dims).build(corpus, "vec_id", "embedding", bq)
     val rBq = meanRecall { (qid, q) =>
-      dropSelf(Similarity.bqHammingRerank(spark, bq, corpus, "vec_id",
+      dropSelf(Bq().probe(spark, bq, corpus, "vec_id",
         "embedding", q, k = TopK + 1, rerank = 100), qid)
     }
     info(f"sq8 rerank(100) recall@$TopK = $rSq8%.3f; bq hamming+rerank(100) = $rBq%.3f")
@@ -204,9 +203,9 @@ class RecallSpec extends SparkSpec {
 
   test("IVF probe (planted labels) nprobe=2 recall@10 >= 0.8") {
     val idx = tmpDir("recall-ivf")
-    Similarity.buildIvf(corpus, "vec_id", "label", "embedding", idx)
+    Ivf().build(corpus, "vec_id", "embedding", idx)
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding",
+      dropSelf(Ivf().probe(spark, idx, "vec_id", "embedding",
         q, k = TopK + 1, nprobe = 2), qid)
     }
     info(f"ivf nprobe=2 recall@$TopK = $r%.3f")
@@ -215,10 +214,9 @@ class RecallSpec extends SparkSpec {
 
   test("IVF probe (learned k-means, no label column) nprobe=2 recall@10 >= 0.8") {
     val idx = tmpDir("recall-ivf-kmeans")
-    Similarity.buildIvfKmeans(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, iters = 5)
+    Ivf(k = K, iters = 5).build(corpus.drop("label"), "vec_id", "embedding", idx)
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding",
+      dropSelf(Ivf().probe(spark, idx, "vec_id", "embedding",
         q, k = TopK + 1, nprobe = 2), qid)
     }
     info(f"ivf(kmeans) nprobe=2 recall@$TopK = $r%.3f")
@@ -231,13 +229,12 @@ class RecallSpec extends SparkSpec {
     // has to earn its keep
     val nCells = 2 * K
     val idx = tmpDir("recall-ivf-auto")
-    Similarity.buildIvfKmeans(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = nCells, iters = 5)
+    Ivf(k = nCells, iters = 5).build(corpus.drop("label"), "vec_id", "embedding", idx)
     // the integrated path: ivfProbeAuto reads K off the persisted
     // index and derives nprobe = nprobeFor(K, target) itself
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfProbeAuto(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, targetRecall = 0.9), qid)
+      dropSelf(Ivf().probe(spark, idx, "vec_id", "embedding",
+        q, k = TopK + 1, nprobe = Ivf.autoNprobe(spark, idx, targetRecall = 0.9)), qid)
     }
     info(f"ivf(kmeans, $nCells cells) derived nprobe=" +
       f"${Similarity.nprobeFor(nCells, 0.9)} recall@$TopK = $r%.3f")
